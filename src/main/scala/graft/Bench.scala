@@ -211,43 +211,8 @@ object Bench {
       loadWaits += 1
     }
     val loadBefore = loadAvg1m()
-    // scan-width valve: see adaptiveMaxPartitionBytes — env overridable
-    val maxSplit = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").map(_.toLong)
-      .getOrElse(adaptiveMaxPartitionBytes(inputBytes(sfDir), cpus.toInt))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxSplit)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt)
-          .getOrElse(adaptiveInitialPartitions(inputBytes(sfDir), cpus.toInt)))
-      .config("spark.ui.enabled", "false")
-      // Bounded listener state (VERDICT r13 item 1): even with the UI
-      // off, SQLAppStatusListener retains up to 1000 completed
-      // executions — each holding the FULL physical-plan description
-      // string and metric graph. This repo's plan-locked queries have
-      // plans that run to megabytes, and the driver marathon executes
-      // ~680 queries (warmup + 2 passes × 226), so the default retention
-      // accumulates gigabytes of dead-but-referenced listener state that
-      // the per-query sweep()'s System.gc() cannot collect. That heap
-      // floor is the named candidate mechanism for the measured ~2×
-      // in-suite inflation (corpus_diversity 2.77 s isolated vs 6.27 s
-      // in the r13 driver artifact). Bound everything the status stores
-      // retain; the jvm_per_query heap/gc evidence below adjudicates.
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.ui.retainedDeadExecutors", "5")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // forceHashAgg hashes every output column; map-typed columns are
-      // hashable only under the legacy flag (order-dependent, fine for a
-      // forcing drive — the value is discarded)
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus.toInt, sfDir)
+    val maxSplit = spark.sparkContext.getConf.get("spark.sql.files.maxPartitionBytes")
     // optional subset filter for debugging: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only.fold(SparkEntry.benchQueries)(names =>
@@ -257,24 +222,8 @@ object Bench {
     // caches otherwise land entirely on whichever query runs first
     // (~8 s of constant overhead measured at sf0.001). Timed pass below
     // reports steady-state per-query latency. SPARK_GRAFT_NO_WARMUP=1 skips.
-    // Per-query attribution must be honest: a query that persists state
-    // (e.g. connectedComponents' final labels checkpoint) would otherwise
-    // tax whichever queries run after it with eviction/GC pressure
-    // (round-2 audit measured up to 19× inflation on later queries).
     // The sweep runs OUTSIDE the timed region, so its cost is charged to
     // nobody and the printed total stays the sum of clean per-query times.
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // two GCs with a pause: the first queues dead broadcasts/checkpoints
-      // onto the ContextCleaner's reference queue, the pause lets the
-      // async cleaner drain it, the second collects what the cleanup
-      // itself released — otherwise the NEXT query's timed region runs
-      // concurrently with the previous query's deferred cleanup
-      System.gc()
-      Thread.sleep(250)
-      System.gc()
-    }
     // Watchdog: one wedged query must not stall the whole bench (the
     // driver's round artifact depends on the summary line PRINTING). Each
     // query runs under its own job group with a hard wall-clock budget;
@@ -350,11 +299,11 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_NO_WARMUP")) Map.empty
       else selected.map { case (name, fn) =>
         val dt = timedRun(name, fn) // guarded: a wedged warmup must not stall the bench
-        sweep()
+        sweep(spark)
         name -> dt
       }.toMap
     def timedPass(): Seq[(String, Double)] = selected.map { case (name, fn) =>
-      sweep() // each query starts from a clean cache/storage state
+      sweep(spark) // each query starts from a clean cache/storage state
       name -> timedRun(name, fn) // negative timing = query threw or timed out
     }
     // Noise defense: the timed sweep runs TWICE and each query reports the
@@ -406,7 +355,7 @@ object Bench {
     val passRestS =
       sys.env.get("SPARK_GRAFT_PASS_REST_S").map(_.toLong).getOrElse(0L)
     def restedPass(): Map[String, Double] = {
-      if (passRestS > 0) { sweep(); Thread.sleep(passRestS * 1000) }
+      if (passRestS > 0) { sweep(spark); Thread.sleep(passRestS * 1000) }
       measuredPass()
     }
     val passesBuf = scala.collection.mutable.ArrayBuffer(restedPass(), restedPass())
@@ -490,5 +439,69 @@ object Bench {
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n":${results.size},"contaminated":$contaminated,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The bench's session: `local[cores]` with the scan split and AQE
+    * initial partition count sized to the input under `sfDir`
+    * (SPARK_GRAFT_MAX_PARTITION_BYTES and SPARK_GRAFT_INIT_PARTS override
+    * them). Bench.main and every Probe mode build their session here, so
+    * a probe measures exactly the config the bench times. */
+  def session(cores: Int, sfDir: String): SparkSession = {
+    // scan-width valve: see adaptiveMaxPartitionBytes — env overridable
+    val maxSplit = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").map(_.toLong)
+      .getOrElse(adaptiveMaxPartitionBytes(inputBytes(sfDir), cores))
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.files.maxPartitionBytes", maxSplit)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt)
+          .getOrElse(adaptiveInitialPartitions(inputBytes(sfDir), cores)))
+      .config("spark.ui.enabled", "false")
+      // Bounded listener state (VERDICT r13 item 1): even with the UI
+      // off, SQLAppStatusListener retains up to 1000 completed
+      // executions — each holding the FULL physical-plan description
+      // string and metric graph. This repo's plan-locked queries have
+      // plans that run to megabytes, and the driver marathon executes
+      // ~680 queries (warmup + 2 passes × 226), so the default retention
+      // accumulates gigabytes of dead-but-referenced listener state that
+      // the per-query sweep's System.gc() cannot collect. That heap
+      // floor is the named candidate mechanism for the measured ~2×
+      // in-suite inflation (corpus_diversity 2.77 s isolated vs 6.27 s
+      // in the r13 driver artifact). Bound everything the status stores
+      // retain; the jvm_per_query heap/gc evidence in main adjudicates.
+      .config("spark.sql.ui.retainedExecutions", "4")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "500")
+      .config("spark.ui.retainedDeadExecutors", "5")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // forceHashAgg hashes every output column; map-typed columns are
+      // hashable only under the legacy flag (order-dependent, fine for a
+      // forcing drive — the value is discarded)
+      .config("spark.sql.legacy.allowHashOnMapType", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Clean cache/storage state between timed runs, charged to nobody.
+    * Per-query attribution must be honest: a query that persists state
+    * (e.g. connectedComponents' final labels checkpoint) would otherwise
+    * tax whichever queries run after it with eviction/GC pressure
+    * (round-2 audit measured up to 19× inflation on later queries). */
+  def sweep(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // two GCs with a pause: the first queues dead broadcasts/checkpoints
+    // onto the ContextCleaner's reference queue, the pause lets the
+    // async cleaner drain it, the second collects what the cleanup
+    // itself released — otherwise the NEXT query's timed region runs
+    // concurrently with the previous query's deferred cleanup
+    System.gc()
+    Thread.sleep(250)
+    System.gc()
   }
 }

@@ -1,846 +1,139 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicReference
 
-/** Dev-only scratch main for inspecting fixture schemas/plans. */
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
+
+/** Attribution tool over the shipped query closures, on Bench's session
+  * ([[Bench.session]]), so what it measures is exactly what the bench
+  * times. Two modes:
+  *
+  *   runMain graft.Probe explain <query> [query...]
+  *     formatted physical plan of named SparkEntry queries (sf0.01);
+  *   runMain graft.Probe attr <sfDir> <cores[,cores...]> <reps> <q1,q2,...>
+  *     one line per (cores, query, rep): wall time, summed task run / CPU
+  *     / GC time, shuffle fetch wait, shuffle read/write and spill MB,
+  *     task and stage counts, idle and stall shares, and the stage that
+  *     owned the most task run time. */
 object Probe {
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("hll")) {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-        .createOrReplaceTempView("li")
-      s.sql("""SELECT l_returnflag, hll_count(l_partkey) AS approx_parts,
-               COUNT(DISTINCT l_partkey) AS exact_parts,
-               parse_time('795.202us') AS t FROM li GROUP BY 1""").show(false)
-      s.stop(); return
+
+  /** One attributed run. `idleFrac` = 1 − run/(wall·cores): the share of
+    * the session's core-seconds no task used (scheduling gaps, driver-side
+    * work, too few tasks). `stallFrac` = 1 − cpu/run: the share of task
+    * time spent off-CPU (fetch waits, I/O, GC pauses, lock waits). */
+  final case class AttrRow(cores: Int, query: String, rep: Int, wallS: Double,
+                           runS: Double, cpuS: Double, gcS: Double, fetchS: Double,
+                           shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
+                           tasks: Long, stages: Long,
+                           domStageId: Int, domStageName: String, domStageRunS: Double) {
+    def idleFrac: Double = 1.0 - runS / (wallS * cores)
+    def stallFrac: Double = 1.0 - cpuS / math.max(1e-3, runS)
+    def line: String =
+      f"ATTR cores=$cores q=$query rep=$rep wall_s=$wallS%.2f run_s=$runS%.2f " +
+        f"cpu_s=$cpuS%.2f gc_s=$gcS%.2f fetch_s=$fetchS%.2f " +
+        f"shuffle_read_mb=$shuffleReadMb%.1f shuffle_write_mb=$shuffleWriteMb%.1f " +
+        f"spill_mb=$spillMb%.1f tasks=$tasks stages=$stages " +
+        f"idle_frac=$idleFrac%.2f stall_frac=$stallFrac%.2f " +
+        f"dom_stage=$domStageId dom_stage_run_s=$domStageRunS%.2f dom_stage_name=$domStageName"
+  }
+
+  /** Task-metric sums for one run; stage ids are unique per application,
+    * so a fresh instance per run needs no filtering. */
+  private final class Totals {
+    var runMs, cpuNs, gcMs, fetchMs, readB, writeB, spillB, tasks, stages = 0L
+    val stageRunMs = scala.collection.mutable.Map.empty[Int, Long]
+    val stageName = scala.collection.mutable.Map.empty[Int, String]
+  }
+
+  /** Sums every finished task into the current run's [[Totals]]. */
+  private final class TotalsListener extends SparkListener {
+    val current = new AtomicReference(new Totals)
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      val t = current.get
+      if (m != null) t.synchronized {
+        t.runMs += m.executorRunTime
+        t.cpuNs += m.executorCpuTime
+        t.gcMs += m.jvmGCTime
+        t.fetchMs += m.shuffleReadMetrics.fetchWaitTime
+        t.readB += m.shuffleReadMetrics.totalBytesRead
+        t.writeB += m.shuffleWriteMetrics.bytesWritten
+        t.spillB += m.memoryBytesSpilled + m.diskBytesSpilled
+        t.tasks += 1
+        t.stageRunMs(te.stageId) = t.stageRunMs.getOrElse(te.stageId, 0L) + m.executorRunTime
+      }
     }
-    if (args.headOption.contains("hhprobe")) {
-      // attribution probe for the text_heavy_hitters_hashed scale legs:
-      //   runMain graft.Probe hhprobe <sfDir>
-      // times (min of 2, after one warmup) the explode+hash alone, the
-      // exact groupBy mirror shape, and the heavy_hitters gate shape.
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      def sh() = graft.ops.Dedup.hashedShingles(
-        Tables.documents(s, dir), "doc_id", "text", 3)
-      // same-JVM fast-vs-chain hash comparison (era-immune): identical
-      // shingle stream, only the hash formulation differs
-      def shRaw() = graft.ops.Dedup.shingles(
-        Tables.documents(s, dir), "doc_id", "text", 3)
-      val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "hash_fast" -> (() => shRaw()
-          .select(graft.functions.F.hash60(col("shingle")).as("h"))
-          .agg(bit_xor(col("h")))),
-        "hash_chain" -> (() => shRaw()
-          .select(graft.ops.TextAnalysis.hash60Chain(col("shingle")).as("h"))
-          .agg(bit_xor(col("h")))),
-        "hash_fast2" -> (() => shRaw()
-          .select(graft.functions.F.hash60(col("shingle")).as("h"))
-          .agg(bit_xor(col("h")))),
-        // the r15 production seam: same shingle stream, xxHash64 instead
-        // of the md5 digest (the md5 pass was hhprobe-measured as the
-        // absolute cost of every hash-keyed family at sf100)
-        "hash_xx" -> (() => shRaw()
-          .select(graft.ops.TextAnalysis.hash60xx(col("shingle")).as("h"))
-          .agg(bit_xor(col("h")))),
-        "explode_hash_only" -> (() => sh().agg(bit_xor(col("h")))),
-        "exact_groupby" -> (() => sh().select((col("h") % 97L).as("hb"))
-          .groupBy(col("hb")).count()),
-        "heavy_hitters" -> (() => sh().select((col("h") % 97L).as("hb"))
-          .agg(graft.functions.MisraGriesAgg.heavy_hitters(col("hb"), 128))))
-      variants.foreach { case (name, fn) =>
-        val ts = (0 until 3).map { _ =>
-          val t0 = System.nanoTime()
-          fn().collect()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"HHPROBE $name warmup=${ts.head}%.2f min2=${ts.tail.min}%.2f")
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val t = current.get
+      t.synchronized {
+        t.stages += 1
+        t.stageName(sc.stageInfo.stageId) = Bridge.stageLabel(sc.stageInfo)
       }
-      s.stop(); return
     }
-    if (args.headOption.contains("embcomp")) {
-      // VERDICT r14 item 7: sim_embedding_components moved +31%
-      // driver-to-driver (3.19 → 4.19 s) with no structural change — the
-      // largest unexplained mover below the 1.5× line. Same-JVM repeated
-      // runs (the era-immune protocol): if the warm min sits back near
-      // ~3.2 s the driver delta was box scatter; if it reproduces, next
-      // step is partition counts per checkpointed-loop iteration.
-      //   runMain graft.Probe embcomp <sfDir>
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      val ts = (0 until 4).map { i =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries("sim_embedding_components")(s, dir).collect(): Unit
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"EMBCOMP run=$i t=$t%.2f")
-        t
+  }
+
+  /** The shipped bench closures for `names`, in order; throws listing every
+    * name SparkEntry.benchQueries does not declare. */
+  private def benchClosures(names: Seq[String]): Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
+    val unknown = names.filterNot(SparkEntry.benchQueries.contains)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown bench queries: ${unknown.mkString(", ")}")
+    names.map(n => n -> SparkEntry.benchQueries(n))
+  }
+
+  /** Run each named bench query `reps` times on `spark` (forced like the
+    * bench, with Bench's sweep before every run) and attribute each run's
+    * task time. The listener is removed before returning. */
+  def attribute(spark: SparkSession, sfDir: String, names: Seq[String],
+                reps: Int): Seq[AttrRow] = {
+    val queries = benchClosures(names)
+    val sc = spark.sparkContext
+    val cores = sc.defaultParallelism
+    val listener = new TotalsListener
+    sc.addSparkListener(listener)
+    try for ((name, fn) <- queries; rep <- 0 until reps) yield {
+      Bench.sweep(spark)
+      Bridge.drainListenerBus(sc) // the sweep's own events stay out of this run
+      val t = new Totals
+      listener.current.set(t)
+      val t0 = System.nanoTime()
+      Bench.forceHashAgg(fn(spark, sfDir))
+      val wall = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListenerBus(sc)
+      t.synchronized {
+        val (domId, domMs) =
+          if (t.stageRunMs.isEmpty) (-1, 0L) else t.stageRunMs.maxBy(_._2)
+        AttrRow(cores, name, rep, wall, t.runMs / 1e3, t.cpuNs / 1e9, t.gcMs / 1e3,
+          t.fetchMs / 1e3, t.readB / 1e6, t.writeB / 1e6, t.spillB / 1e6,
+          t.tasks, t.stages, domId, t.stageName.getOrElse(domId, "?"), domMs / 1e3)
       }
-      println(f"EMBCOMP warm_min=${ts.tail.min}%.2f warmup=${ts.head}%.2f")
-      s.stop(); return
-    }
-    if (args.headOption.contains("compprobe")) {
-      // stage attribution for the connected-components family (8 bench
-      // rows re-derive a pair graph then run the label loop): times,
-      // same-JVM min-of-2 after one warmup, the LSH pair derivation
-      // alone, the symmetrized-edge materialization in the CURRENT
-      // union-of-two-pair-plans shape vs a one-pass explode shape, and
-      // the full dedup_components / sim_embedding_components queries —
-      // so the duplicated-pipeline share is measured, not assumed.
-      //   runMain graft.Probe compprobe <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.ui.retainedExecutions", "4")
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "500")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      def pairs() = graft.ops.Dedup.minhashLshPairs(
-        Tables.documents(s, dir), "doc_id", "text").select("id1", "id2")
-      def edgesUnion() = {
-        val p = pairs()
-        p.select(col("id1").as("src"), col("id2").as("dst"))
-          .unionByName(p.select(col("id2").as("src"), col("id1").as("dst")))
-      }
-      def edgesExplode() = pairs().select(explode(array(
-          struct(col("id1").as("src"), col("id2").as("dst")),
-          struct(col("id2").as("src"), col("id1").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // the pre-r15 connectedComponents, inlined verbatim (union-of-two-
-      // selects symmetrization, distinct-seed labels, two-join loop body)
-      // so old-vs-new is a SAME-JVM A/B — box drift between probe runs
-      // was measured at ±30%, bigger than the effect under test
-      def compsOld(ids: org.apache.spark.sql.DataFrame, idCol: String,
-                   p: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        val edges = p.select(col("id1").as("src"), col("id2").as("dst"))
-          .unionByName(p.select(col("id2").as("src"), col("id1").as("dst")))
-          .localCheckpoint(true)
-        var labels = edges.select(col("src").as("id")).distinct()
-          .withColumn("comp", col("id").cast("long"))
-          .localCheckpoint(true)
-        def compSum(df: org.apache.spark.sql.DataFrame): Long =
-          df.agg(coalesce(sum(col("comp")), lit(0L))).first().getLong(0)
-        var prevSum = compSum(labels)
-        var converged = false
-        var iter = 0
-        while (!converged && iter < 50) {
-          val neighMin = edges
-            .join(labels.select(col("id").as("dst"), col("comp").as("dst_comp")), Seq("dst"))
-            .groupBy(col("src")).agg(min(col("dst_comp")).as("neigh_comp"))
-          val prev = labels
-          labels = labels
-            .join(neighMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-            .select(col("id"),
-              least(col("comp"), coalesce(col("neigh_comp"), col("comp"))).as("comp"))
-            .localCheckpoint(true)
-          org.apache.spark.sql.graftbridge.Bridge.backingRdds(prev).foreach(_.unpersist(blocking = false))
-          val curSum = compSum(labels)
-          converged = curSum == prevSum
-          prevSum = curSum
-          iter += 1
-        }
-        org.apache.spark.sql.graftbridge.Bridge.backingRdds(edges).foreach(_.unpersist(blocking = false))
-        ids.select(col(idCol))
-          .join(labels.withColumnRenamed("id", idCol), Seq(idCol), "left")
-          .select(col(idCol),
-            coalesce(col("comp"), col(idCol).cast("long")).as("component"))
-      }
-      val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "pairs" -> (() => pairs()),
-        "edges_union" -> (() => edgesUnion()),
-        "edges_explode" -> (() => edgesExplode()),
-        "comps_old" -> (() => compsOld(
-          Tables.documents(s, dir).select(col("doc_id")), "doc_id", pairs())),
-        "comps_full" -> (() => SparkEntry.queries("dedup_components")(s, dir)),
-        "comps_star" -> (() => SparkEntry.queries("dedup_components_star")(s, dir)),
-        "embcomp_old" -> (() => {
-          val emb = Tables.embeddings(s, dir)
-          compsOld(emb.select(col("vec_id")), "vec_id",
-            graft.ops.Similarity.cosinePairs(emb, "vec_id", "embedding",
-              threshold = 0.3, planes = 4).select(col("id1"), col("id2")))
-        }),
-        "embcomp_full" -> (() => SparkEntry.queries("sim_embedding_components")(s, dir)))
-      // one full warmup CYCLE over every leg (so no leg eats the whole
-      // JVM's JIT/codegen warmup), then two measured cycles, min taken —
-      // leg order no longer biases the comparison
-      def runLeg(f: () => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        Bench.forceHashAgg(f().toDF())
-        val t = (System.nanoTime() - t0) / 1e9
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        t
-      }
-      val warm = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m1 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m2 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      legs.foreach { case (n, _) =>
-        println(f"COMPPROBE $n warm=${warm(n)}%.2f min2=${math.min(m1(n), m2(n))}%.2f")
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("qprobe")) {
-      // generic same-JVM query timer: one warmup CYCLE over every named
-      // query, then two measured cycles (min reported) — the leg-order
-      // JIT bias and between-run box drift both cancel.
-      //   runMain graft.Probe qprobe <sfDir> <q1,q2,...>
-      val dir = args(1)
-      val names = args(2).split(",").toSeq
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.legacy.allowHashOnMapType", "true")
-        // bounded listener retention, same as Bench: the default 1000
-        // retained executions hold full plan strings — megabytes per
-        // query here — and inflate later legs via GC pressure (the r13
-        // in-suite mechanism, reproduced in probe JVMs this round)
-        .config("spark.sql.ui.retainedExecutions", "4")
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "500")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      def runQ(n: String): Double = {
-        val t0 = System.nanoTime()
-        Bench.forceHashAgg(SparkEntry.benchQueries(n)(s, dir))
-        val t = (System.nanoTime() - t0) / 1e9
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        t
-      }
-      val warm = names.map(n => n -> runQ(n)).toMap
-      val m1 = names.map(n => n -> runQ(n)).toMap
-      val m2 = names.map(n => n -> runQ(n)).toMap
-      names.foreach { n =>
-        println(f"QPROBE $n warm=${warm(n)}%.2f min2=${math.min(m1(n), m2(n))}%.2f")
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("lmprune")) {
-      // stage attribution for text_lm_backoff_pruned, which reads ~2.5 s
-      // in-suite but 11-14 s in clean probe JVMs: times each train table,
-      // the rebuilt hash tables, and the full gate.
-      //   runMain graft.Probe lmprune <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.ui.retainedExecutions", "4")
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "500")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      import graft.ops.TextAnalysis
-      def docs() = Tables.documents(s, dir)
-      def en() = docs().filter(col("lang") === "en")
-      def tri() = TextAnalysis.lmNgramCounts(en(), "doc_id", "text", 3).filter(col("c") >= 2L)
-      def bi() = TextAnalysis.lmNgramCounts(en(), "doc_id", "text", 2).filter(col("c") >= 2L)
-      def uni() = TextAnalysis.lmNgramCounts(en(), "doc_id", "text", 1)
-      def tables() = TextAnalysis.backoffTablesFromCounts(tri(), bi(), uni())
-      val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "tri_counts" -> (() => tri()),
-        "bi_counts" -> (() => bi()),
-        "uni_counts" -> (() => uni()),
-        "t3_table" -> (() => tables()._1),
-        "score_full" -> (() => SparkEntry.queries("text_lm_backoff_pruned")(s, dir)),
-        "score_unpruned" -> (() => SparkEntry.queries("text_lm_backoff")(s, dir)))
-      def runLeg(f: () => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        Bench.forceHashAgg(f().toDF())
-        val t = (System.nanoTime() - t0) / 1e9
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        t
-      }
-      val warm = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m1 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m2 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      legs.foreach { case (n, _) =>
-        println(f"LMPRUNE $n warm=${warm(n)}%.2f min2=${math.min(m1(n), m2(n))}%.2f")
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("compplan")) {
-      // plan captures for the connectedComponents r15 rewrite: the final
-      // query plan of a loop query is just `ids ⋈ LogicalRDD(labels)`
-      // (the loop executes eagerly), so the evidence lives in the STAGE
-      // plans — edge symmetrization (union-of-two-pair-plans vs one-pass
-      // explode) and one loop iteration (two-join vs join+union+agg).
-      //   runMain graft.Probe compplan <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      def pairs() = graft.ops.Dedup.minhashLshPairs(
-        Tables.documents(s, dir), "doc_id", "text").select("id1", "id2")
-      println("========== components_edges BEFORE (union of two pair plans) ==========")
-      val p1 = pairs()
-      p1.select(col("id1").as("src"), col("id2").as("dst"))
-        .unionByName(p1.select(col("id2").as("src"), col("id1").as("dst")))
-        .explain("formatted")
-      println("========== components_edges AFTER (one-pass explode) ==========")
-      pairs().select(explode(array(
-          struct(col("id1").cast("long").as("src"), col("id2").cast("long").as("dst")),
-          struct(col("id2").cast("long").as("src"), col("id1").cast("long").as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .explain("formatted")
-      // loop-iteration shapes over checkpointed stand-ins (exactly how the
-      // loop sees them: both sides are LogicalRDDs)
-      val edges = s.range(0, 100).select((col("id") % 37).as("src"), (col("id") % 11).as("dst"))
-        .localCheckpoint(true)
-      val labels = s.range(0, 37).select(col("id"), col("id").as("comp"))
-        .localCheckpoint(true)
-      println("========== components_iter BEFORE (join+groupBy+join) ==========")
-      val neighMin = edges
-        .join(labels.select(col("id").as("dst"), col("comp").as("dst_comp")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("dst_comp")).as("neigh_comp"))
-      labels
-        .join(neighMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("neigh_comp"), col("comp"))).as("comp"))
-        .explain("formatted")
-      println("========== components_iter AFTER (join + message-union aggregate) ==========")
-      edges
-        .join(labels.select(col("id").as("dst"), col("comp")), Seq("dst"))
-        .select(col("src").as("id"), col("comp"))
-        .unionByName(labels.toDF())
-        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-        .explain("formatted")
-      s.stop(); return
-    }
-    if (args.headOption.contains("editprobe")) {
-      // stage attribution for dedup_edit_verify (the top single-op bench
-      // row at sf0.1): times, same-JVM min-of-2 after one warmup, the
-      // signature pass alone, the candidate stage, the candidate→text
-      // join without the distance, and the full op — so the expensive
-      // term is named by measurement, not attribution.
-      //   runMain graft.Probe editprobe <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      // same plant as OracleOpsQueries.dedupEditVerify
-      val variants = Seq(
-        "the quick brown fox jumps over the lazy dog again and again today",
-        "teh quick brown fox jumps over the lazy dog again and again today",
-        "the quik brown fox jumps over the lazy dog again and again today",
-        "the quicck brown fox jumps over the lazy dog again and again today")
-      val v = (col("doc_id") / 9).cast("long") % 4
-      val planted = when(col("doc_id") % 9 === 0,
-        when(v === 0, lit(variants(0))).when(v === 1, lit(variants(1)))
-          .when(v === 2, lit(variants(2))).otherwise(lit(variants(3))))
-        .otherwise(col("text"))
-      def docs() = Tables.documents(s, dir)
-        .select(col("doc_id"), planted.as("text"))
-      def perDoc() = graft.ops.Dedup.minhashPerDocSlim(docs(), "doc_id", "text", 3, 8)
-      def cand() = graft.ops.Dedup.lshCandidates(perDoc(), "doc_id", 8, 4,
-        graft.ops.Dedup.DefaultMaxBandBucketSize)
-      def textJoin() = {
-        val texts = docs().select(col("doc_id"), col("text"))
-        cand()
-          .join(texts.toDF("id1", "__t1"), "id1")
-          .join(texts.toDF("id2", "__t2"), "id2")
-          .select(col("id1"), col("id2"), length(col("__t1")) + length(col("__t2")))
-      }
-      def full() = graft.ops.Dedup.editVerifiedPairs(docs(), "doc_id", "text", maxDist = 6L)
-      val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "perdoc" -> (() => perDoc()),
-        "cand" -> (() => cand()),
-        "textjoin" -> (() => textJoin()),
-        "full" -> (() => full()))
-      legs.foreach { case (name, f) =>
-        val ts = (0 until 3).map { _ =>
-          val t0 = System.nanoTime()
-          Bench.forceHashAgg(f().toDF())
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"EDITPROBE $name warm=${ts.head}%.2f min2=${ts.tail.min}%.2f")
-      }
-      println(s"EDITPROBE n_cand=${cand().count()} " +
-        s"n_out=${full().count()}")
-      if (args.length > 2 && args(2) == "finalplan") {
-        val d = full()
-        d.collect(): Unit // finalize THIS dataset's adaptive plan
-        val fp = d.queryExecution.executedPlan.toString
-        println("EDITPROBE_FINALPLAN reused=" +
-          "ReusedExchange".r.findAllIn(fp).length +
-          " exchanges=" + "Exchange".r.findAllIn(fp).length)
-        println(fp.linesIterator.filter(l =>
-          l.contains("Exchange") || l.contains("Join") || l.contains("Aggregate") ||
-            l.contains("QueryStage") || l.contains("AdaptiveSparkPlan"))
-          .mkString("\n"))
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("lmprobe")) {
-      // hash-share attribution for the LM-backoff family: times the
-      // trigram-occurrence explode with its FIVE per-gram hash60s (the
-      // scoring scan's per-row work) under md5 vs xxhash64, plus the
-      // full text_lm_backoff gate, so the md5 share is measured before
-      // any seam is considered.  runMain graft.Probe lmprobe <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      import graft.ops.TextAnalysis
-      def occ(h: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-        val docs = Tables.documents(s, dir)
-        // materialized-tokens shape, matching production since r16
-        val t = col("__tokens")
-        val gs = when(size(t) >= 3,
-          transform(sequence(lit(1), size(t) - 2), i =>
-            concat_ws(" ", element_at(t, i), element_at(t, i + 1),
-              element_at(t, i + 2))))
-          .otherwise(array())
-        graft.operators.Scale.balanceToCores(docs)
-          .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__tokens"))
-          .select(col("doc_id"), explode(gs).as("__g"))
-          .select(col("doc_id"),
-            h(substring_index(col("__g"), " ", 2)).as("h1_3"),
-            h(col("__g")).as("h12_3"),
-            h(substring_index(substring_index(col("__g"), " ", -2), " ", 1)).as("h1_2"),
-            h(substring_index(col("__g"), " ", -2)).as("h12_2"),
-            h(substring_index(col("__g"), " ", -1)).as("h_1"))
-      }
-      val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "occ_md5" -> (() => occ(TextAnalysis.hash60)),
-        "occ_xx" -> (() => occ(TextAnalysis.hash60xx)),
-        "full_backoff" -> (() => SparkEntry.queries("text_lm_backoff")(s, dir)))
-      legs.foreach { case (name, f) =>
-        val ts = (0 until 3).map { _ =>
-          val t0 = System.nanoTime()
-          Bench.forceHashAgg(f().toDF())
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"LMPROBE $name warm=${ts.head}%.2f min2=${ts.tail.min}%.2f")
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("lmscale")) {
-      // Anti-scaling attribution (VERDICT r15 items 1/3/6): the driver
-      // measured text_lm_backoff at 24.8 s on 32 cores vs ~5.2 s on 8
-      // IN THE SAME SESSION — per-query jvm evidence rules out GC/heap,
-      // so the question is where task time goes as core count rises.
-      // Runs the named queries `reps` times in ONE JVM at local[cores]
-      // and prints, per rep: wall, Σ task executorRunTime / CpuTime /
-      // jvmGcTime / shuffleFetchWait / resultSerialization, task and
-      // stage counts — idle share = 1 - runTime/(wall·cores), in-task
-      // stall = 1 - cpuTime/runTime.
-      //   runMain graft.Probe lmscale <sfDir> <cores> <reps> <q1,q2,...>
-      import org.apache.spark.scheduler._
-      val dir = args(1); val cores = args(2).toInt; val reps = args(3).toInt
-      val names = if (args.length > 4) args(4).split(",").toSeq
-        else Seq("text_lm_backoff")
-      val s = SparkSession.builder().master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores)
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), cores))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), cores))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.legacy.allowHashOnMapType", "true")
-        .config("spark.sql.ui.retainedExecutions", "4")
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "500")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      val runMs = new java.util.concurrent.atomic.AtomicLong
-      val cpuMs = new java.util.concurrent.atomic.AtomicLong
-      val gcMs = new java.util.concurrent.atomic.AtomicLong
-      val fetchMs = new java.util.concurrent.atomic.AtomicLong
-      val serMs = new java.util.concurrent.atomic.AtomicLong
-      val deserMs = new java.util.concurrent.atomic.AtomicLong
-      val nTasks = new java.util.concurrent.atomic.AtomicLong
-      val nStages = new java.util.concurrent.atomic.AtomicLong
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            runMs.addAndGet(m.executorRunTime)
-            cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-            gcMs.addAndGet(m.jvmGCTime)
-            fetchMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-            serMs.addAndGet(m.resultSerializationTime)
-            deserMs.addAndGet(m.executorDeserializeTime)
-            nTasks.incrementAndGet(): Unit
-          }
-        }
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-          nStages.incrementAndGet(): Unit
-      })
-      names.foreach { qname =>
-        (0 until reps).foreach { i =>
-          Seq(runMs, cpuMs, gcMs, fetchMs, serMs, deserMs, nTasks, nStages)
-            .foreach(_.set(0L))
-          val t0 = System.nanoTime()
-          Bench.forceHashAgg(SparkEntry.benchQueries(qname)(s, dir))
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(400) // listener bus drain
-          println(f"LMSCALE q=$qname cores=$cores rep=$i wall=$wall%.2f " +
-            f"run_s=${runMs.get / 1e3}%.2f cpu_s=${cpuMs.get / 1e3}%.2f " +
-            f"gc_s=${gcMs.get / 1e3}%.2f fetch_s=${fetchMs.get / 1e3}%.2f " +
-            f"ser_s=${serMs.get / 1e3}%.2f deser_s=${deserMs.get / 1e3}%.2f " +
-            f"tasks=${nTasks.get} stages=${nStages.get} " +
-            f"idle_frac=${1.0 - runMs.get / 1e3 / (wall * cores)}%.2f " +
-            f"stall_frac=${1.0 - cpuMs.get.toDouble / math.max(1L, runMs.get)}%.2f")
-          s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-          System.gc()
-        }
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("dpoprobe")) {
-      // stage attribution for corpus_dpo_multiturn (781 tasks / 29 stages
-      // for ~1.5k output rows): times the threadPaths loop, the capped
-      // pair table, the prompt-prefix render, and the full gate.
-      //   runMain graft.Probe dpoprobe <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.legacy.allowHashOnMapType", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      import graft.ops.Packing
-      val pos = col("doc_id") % 16
-      val parent = when(pos === 0, lit(null).cast("long"))
-        .otherwise(col("doc_id") - pos + expr("(doc_id % 16 - 1) DIV 2"))
-      def msgs() = Tables.documents(s, dir).select(col("doc_id"),
-        parent.as("parent"),
-        concat(lit("msg "), col("doc_id").cast("string")).as("mtext"),
-        (col("doc_id") * 7919 % 10000).as("score_fp"))
-      def paths() = Packing.threadPaths(msgs(), "doc_id", col("parent"), 5)
-      def pairs() = {
-        val cands = paths().filter(col("depth") % 2 === 0)
-          .select(col("doc_id").as("__cid"))
-          .join(msgs().select(col("doc_id").cast("long").as("__cid"),
-            col("parent").cast("long").as("__prompt"),
-            col("score_fp").as("__score")), Seq("__cid"))
-        Packing.preferencePairs(cands, "__prompt", "__cid", col("__score"),
-          1L, 8, 64)
-      }
-      def full() = SparkEntry.queries("corpus_dpo_multiturn")(s, dir)
-      val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "paths" -> (() => paths()),
-        "pairs" -> (() => pairs()),
-        "full" -> (() => full()))
-      def runLeg(f: () => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        Bench.forceHashAgg(f().toDF())
-        val t = (System.nanoTime() - t0) / 1e9
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        t
-      }
-      val warm = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m1 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m2 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      legs.foreach { case (n, _) =>
-        println(f"DPOPROBE $n warm=${warm(n)}%.2f min2=${math.min(m1(n), m2(n))}%.2f")
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("hofmat")) {
-      // Does an un-materialized tokens(text) inside a transform() lambda
-      // re-run the regex split per element? ngramOccurrences' scaladoc
-      // says yes (measured r13-era); this probe re-measures the bare
-      // occurrence-scan shape both ways so the r16 materialization sweep
-      // is evidence-based.  runMain graft.Probe hofmat <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      import graft.ops.TextAnalysis.{tokens, hash60}
-      def gsOf(t: org.apache.spark.sql.Column) =
-        when(size(t) >= 3,
-          transform(sequence(lit(1), size(t) - 2), i =>
-            concat_ws(" ", element_at(t, i), element_at(t, i + 1),
-              element_at(t, i + 2))))
-          .otherwise(array())
-      def occInline() = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(gsOf(tokens(col("text")))).as("__g"))
-        .select(hash60(col("__g")).as("h"))
-      def occMat() = Tables.documents(s, dir)
-        .select(col("doc_id"), tokens(col("text")).as("__tokens"))
-        .select(col("doc_id"), explode(gsOf(col("__tokens"))).as("__g"))
-        .select(hash60(col("__g")).as("h"))
-      val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "occ_inline" -> (() => occInline()),
-        "occ_mat" -> (() => occMat()))
-      def runLeg(f: () => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        Bench.forceHashAgg(f().toDF())
-        val t = (System.nanoTime() - t0) / 1e9
-        System.gc()
-        t
-      }
-      val warm = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m1 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      val m2 = legs.map { case (n, f) => n -> runLeg(f) }.toMap
-      legs.foreach { case (n, _) =>
-        println(f"HOFMAT $n warm=${warm(n)}%.2f min2=${math.min(m1(n), m2(n))}%.2f")
-      }
-      s.stop(); return
-    }
-    if (args.headOption.contains("bandhist")) {
-      // band-bucket concentration measurement (the r14-named residual of
-      // the LSH sf100 superlinearity): log2-bucketed band-bucket sizes
-      // with their pair fanout Σ bs·(bs−1)/2 — how much of the candidate
-      // join each size class owes, and what the cap is actually cutting.
-      //   runMain graft.Probe bandhist <sfDir>
-      import org.apache.spark.sql.functions._
-      val dir = args(1)
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.maxPartitionBytes",
-          Bench.adaptiveMaxPartitionBytes(Bench.inputBytes(dir), 32))
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          Bench.adaptiveInitialPartitions(Bench.inputBytes(dir), 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      val bs = graft.ops.Dedup.bandBucketSizes(
-        Tables.documents(s, dir), "doc_id", "text", n = 3, k = 8, bands = 4)
-      val smeared = Seq(1, 2, 4, 8, 16, 32).foldLeft(col("bs")) {
-        (acc, sh) => acc.bitwiseOR(shiftright(acc, sh))
-      }
-      bs.withColumn("bs_log2", (bit_count(smeared) - 1).cast("long"))
-        .groupBy(col("bs_log2"))
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(col("bs")).as("n_rows"),
-          sum(col("bs") * (col("bs") - 1) / 2).cast("long").as("pair_fanout"))
-        .orderBy(col("bs_log2"))
-        .collect().foreach(r => println(
-          s"BANDHIST bs_log2=${r.getLong(0)} buckets=${r.getLong(1)} " +
-            s"rows=${r.getLong(2)} pair_fanout=${r.getLong(3)}"))
-      s.stop(); return
-    }
-    if (args.headOption.contains("asof")) {
-      import org.apache.spark.sql.functions._
-      val s = SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      val ev = Tables.events(s, "/root/testdata/sf0.01").select(
-        col("event_id"), col("user_id"), expr("ts DIV 1000").as("ts_us"),
-        col("event_type"), col("value"))
-      val probes = ev.filter(col("event_type") === "error").select("event_id", "user_id", "ts_us")
-      val quotes = ev.filter(col("event_type") === "click").select("user_id", "ts_us", "value")
-      val native = graft.operators.AsOf.asOfJoinNative(s, probes, quotes, "user_id", "ts_us")
-        .select("event_id", "value").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      val windowed = graft.operators.AsOf.asOfJoin(probes, quotes, "user_id", "ts_us", Seq("value"))
-        .select("event_id", "asof_value").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      println(s"ASOF_NATIVE rows=${native.size} matches_windowed=${native == windowed}")
-      s.stop(); return
-    }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (args.headOption.contains("explain")) {
-      // print the formatted physical plan of named SparkEntry queries:
-      //   runMain graft.Probe explain <query> [query...]
-      args.drop(1).foreach { name =>
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The fixture `explain` plans against. */
+  private val ExplainSf = "/root/testdata/sf0.01"
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case "explain" :: names =>
+      val spark = Bench.session(4, ExplainSf)
+      try names.foreach { name =>
         println(s"========== $name ==========")
-        SparkEntry.queries(name)(spark, "/root/testdata/sf0.01").explain("formatted")
+        SparkEntry.queries(name)(spark, ExplainSf).explain("formatted")
+      } finally spark.stop()
+    case List("attr", sfDir, cores, reps, queries) =>
+      val names = queries.split(",").toSeq
+      benchClosures(names) // fail on an unknown name before any session starts
+      cores.split(",").map(_.trim.toInt).foreach { c =>
+        val spark = Bench.session(c, sfDir)
+        try attribute(spark, sfDir, names, reps.toInt).foreach(r => println(r.line))
+        finally spark.stop()
       }
-      spark.stop(); return
-    }
-    if (args.headOption.contains("units")) {
-      // drive the P5-P7 expressions through a real distributed plan
-      import org.apache.spark.sql.functions._
-      import graft.functions.F
-      val df = spark.range(0, 1000000, 1, 8)
-        .select(
-          F.parse_time(concat(col("id").cast("string"), lit("us"))).as("ns"),
-          F.parse_size(concat(col("id").cast("string"), lit(" KB"))).as("bytes"),
-          F.parse_units(concat(col("id").cast("string"), lit("K"))).as("units"))
-      df.explain()
-      val agg = df.agg(sum("ns"), sum("bytes"), sum("units")).collect()(0)
-      println(s"UNITS_PROBE ns=${agg.getLong(0)} bytes=${agg.getLong(1)} units=${agg.getLong(2)}")
-      val rh = spark.range(0, 100000, 1, 8)
-        .select(F.rolling_hash(concat(lit("doc"), col("id").cast("string"))).as("h"))
-        .agg(countDistinct(col("h"))).collect()(0).getLong(0)
-      println(s"ROLLING_HASH distinct=$rh of 100000")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("chunklinear")) {
-      // evidence for the VERDICT-r9-item-4 rewrite: per-row time of
-      // sentence chunking must scale ~linearly in unit count (the old
-      // slice-and-fold was quadratic — 4× units = ~16× time). Not a
-      // gate (wall-clock on a shared box); printed for the record.
-      import org.apache.spark.sql.functions._
-      import graft.ops.Chunking
-      def time(u: Int): Double = {
-        val unit = (1 to 8).map(i => s"tok$i").mkString(" ")
-        val text = Seq.fill(u)(unit).mkString(". ")
-        val df = spark.range(0, 64, 1, 4)
-          .select(col("id").as("doc_id"), lit(text).as("text"))
-        val t0 = System.nanoTime()
-        Chunking.chunkBySentences(df, "doc_id", "text", targetTokens = 64)
-          .agg(count(lit(1)), sum(col("n_tok"))).collect(): Unit
-        (System.nanoTime() - t0) / 1e9
-      }
-      time(500): Unit // JIT + codegen warmup
-      val t1 = time(2000)
-      val t2 = time(8000)
-      println(f"CHUNK_LINEAR units=2000 t=$t1%.2fs units=8000 t=$t2%.2fs " +
-        f"ratio=${t2 / t1}%.2f (linear ~4, quadratic ~16)")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("stream")) {
-      // drive the streaming ingest path: watch dir -> parquet sink
-      val Array(_, inDir, outDir) = args
-      import org.apache.spark.sql.streaming.Trigger
-      val q = graft.streaming.Streams.profileStream(spark, inDir, "stream-tag")
-        .writeStream.format("parquet")
-        .option("path", s"$outDir/data")
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      val n = spark.read.parquet(s"$outDir/data").count()
-      println(s"STREAM_INGESTED $n")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("ml")) {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val stmts = (0 until 15).map(i => (s"s$i", s"SELECT a FROM t WHERE a = $i")) ++
-        (0 until 15).map(i => (s"c$i",
-          s"SELECT a, count(*) FROM t JOIN u ON t.k = u.k WHERE b IN (1,2) GROUP BY a ORDER BY 2 LIMIT $i"))
-      val queries = stmts.toDF("query_id", "stmt").withColumn("num_tables", lit(1L))
-      val withSql = graft.sqlstats.SqlFeatures.attach(spark, queries)
-      val scaled = graft.ml.Clustering.assembleAndScale(
-        graft.ml.Clustering.featureColumns(withSql))
-      graft.ml.Clustering.elbow(scaled, Seq(1, 2, 3)).foreach { case (k, w, p) =>
-        println(f"ELBOW k=$k wcss=$w%.3f explained=$p%.1f%%")
-      }
-      graft.ml.Clustering.finalClusters(scaled, k = 2).show(false)
-      val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-      println("IVF_TOPK:")
-      graft.ops.Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 5).show(false)
-      val q = graft.ops.Similarity.quantizeInt8(Tables.embeddings(spark, "/root/testdata/sf0.01"), "embedding")
-      val deq = q.select(col("vec_id"),
-        graft.ops.Similarity.dequantize(col("q"), col("scale")).as("embedding"))
-      val ex = graft.ops.Similarity.bruteForceTopK(
-        Tables.embeddings(spark, "/root/testdata/sf0.01"), "vec_id", "embedding", 0L, 10)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-    val ap = graft.ops.Similarity.bruteForceTopK(deq, "vec_id", "embedding", 0L, 10)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      println(s"QUANT_INT8 top10_overlap=${ex.intersect(ap).size}/10")
-      spark.stop(); return
-    }
-    val d = "/root/testdata/sf0.001"
-    for (t <- Tables.names) {
-      val df = Tables.load(spark, d, t)
-      println(s"== $t  rows=${df.count()}")
-      println(df.schema.treeString)
-    }
-    Tables.events(spark, d).show(3, false)
-    Tables.embeddings(spark, d).show(2, false)
-    Tables.documents(spark, d).show(3, truncate = 60)
-    spark.stop()
+    case _ =>
+      System.err.println(
+        "usage: Probe explain <query...> | Probe attr <sfDir> <cores[,cores...]> <reps> <q1,q2,...>")
+      sys.exit(2)
   }
 }

@@ -20,12 +20,10 @@ object ProfileIngest {
 
   case class ProfileTables(queries: DataFrame, operators: DataFrame, fragments: DataFrame)
 
-  /** Decode one dump line: `<ts> <qid> <base64(zlib(thrift))>`
-    * (analyze_profiles.py:16-17: `line.split(' ')[2]`). The stable query id
-    * is the md5 of the payload — deterministic, unlike the reference's
-    * auto-generated ObjectIds. */
-  /** Decode the payload to a tree + stable query id (throws on corrupt
-    * input). */
+  /** Decode one dump line `<ts> <qid> <base64(zlib(thrift))>`
+    * (analyze_profiles.py:16-17: `line.split(' ')[2]`) to a tree + stable
+    * query id; throws on corrupt input. The id is the md5 of the payload —
+    * deterministic, unlike the reference's auto-generated ObjectIds. */
   def decodeLine(line: String): (graft.model.ProfileTree, String) = {
     val payload = line.split(" ")(2)
     val bytes = java.util.Base64.getDecoder.decode(payload)
@@ -58,11 +56,7 @@ object ProfileIngest {
   def badLineCount(spark: SparkSession, inputPath: String): Long = {
     import spark.implicits._
     spark.read.textFile(inputPath).filter { l =>
-      l.trim.nonEmpty && (try {
-        val (tree, qid) = decodeLine(l)
-        ProfileParser.parse(tree, "audit", qid)
-        false
-      } catch { case _: Exception => true })
+      l.trim.nonEmpty && scala.util.Try(parseLine(l, "audit", strict = true)).isFailure
     }.count()
   }
 

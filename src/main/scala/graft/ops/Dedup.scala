@@ -805,8 +805,8 @@ object Dedup {
     * behind the bucket cap: minhash values are MINIMA, so band keys
     * crowd toward small values as the corpus grows and bucket sizes
     * (hence the candidate join's Σ bs² fanout) grow faster than the
-    * corpus. `Probe bandhist` rolls this into a log2 histogram with
-    * pair fanout per size class — the measurement to take before
+    * corpus. Grouped by log2(bs) with Σ bs·(bs−1)/2 per size class
+    * (COVERAGE.md, round 14), it is the measurement to take before
     * retuning [[DefaultMaxBandBucketSize]]. */
   def bandBucketSizes(df: DataFrame, id: String, text: String,
                       n: Int, k: Int, bands: Int): DataFrame =
@@ -1323,6 +1323,15 @@ object Dedup {
     * Beyond" (SoCC'14) — same join shape, fewer rounds. */
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
                           maxIter: Int = 50): DataFrame = {
+    // the label arithmetic casts ids to long, which turns a string id into
+    // NULL and silently makes every doc a singleton: check the schema (no
+    // job, no plan change) and fail loudly instead
+    val idFields = Seq(ids.select(idCol), pairs.select("id1"), pairs.select("id2"))
+      .map(_.schema.head)
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+    require(idFields.forall(f => Set[DataType](ByteType, ShortType, IntegerType, LongType)(f.dataType)),
+      "connectedComponents needs integral ids, got " +
+        idFields.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
     // symmetrize in ONE pass over the pair plan: exploding each pair into
     // both directions runs the (often expensive — a whole LSH pipeline)
     // pair derivation once, where the old union-of-two-selects shape ran

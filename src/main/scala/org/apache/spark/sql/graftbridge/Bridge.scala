@@ -33,4 +33,17 @@ object Bridge {
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
+
+  /** Block until every listener event posted so far has been delivered
+    * (the bus drain is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** A stage's distinct operator scopes in RDD creation order (e.g.
+    * "Exchange > Project > Generate > WholeStageCodegen (2)"), or its
+    * call-site name when its RDDs carry none. RDDOperationScope is
+    * `private[spark]`. */
+  def stageLabel(info: org.apache.spark.scheduler.StageInfo): String = {
+    val scopes = info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+    if (scopes.isEmpty) info.name else scopes.mkString(" > ")
+  }
 }

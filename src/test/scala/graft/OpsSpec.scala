@@ -35,6 +35,19 @@ class OpsSpec extends SparkSpec {
     assert(lone === Map(7L -> 7L, 8L -> 8L))
   }
 
+  test("connectedComponents: non-integral ids fail loudly instead of becoming singletons") {
+    val ids = Seq("a", "b", "c").toDF("doc_id")
+    val pairs = Seq(("a", "b")).toDF("id1", "id2")
+    val e = intercept[IllegalArgumentException](
+      graft.ops.Dedup.connectedComponents(ids, "doc_id", pairs))
+    assert(e.getMessage.contains("doc_id: string"))
+    // integral but not long (int) ids stay accepted
+    val comp = graft.ops.Dedup.connectedComponents(
+      Seq(1, 2, 3).toDF("doc_id"), "doc_id", Seq((1, 2)).toDF("id1", "id2"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(comp === Map(1 -> 1L, 2 -> 1L, 3 -> 3L))
+  }
+
   test("substringSpans: interval union of duplicated windows, overlaps counted once") {
     val df = Seq(
       (1L, "a b c d e f g h"),        // shares the 6-token run a..f with doc 2
@@ -256,7 +269,7 @@ class OpsSpec extends SparkSpec {
     val sc = Dedup.simhashPairs(docs, "doc_id", "text", maxBandBucketSize = Some(2))
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sc === Set((4L, 5L)))
-    // the bandhist diagnostic (Probe bandhist / bandBucketSizes) sees
+    // the bandhist diagnostic (bandBucketSizes) sees
     // exactly this structure: identical docs share every band bucket, so
     // the trio makes four size-3 buckets and the pair four size-2
     val bs = Dedup.bandBucketSizes(docs, "doc_id", "text", n = 3, k = 8,
