@@ -3,15 +3,19 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{NumericType, StringType}
 
+import graft.operators.Scale
+
 /** S8, closing the last visible surface gap vs the reference: the reference
   * renders ~30 matplotlib PNGs (reference code/python/plots.py:7-85); this
   * renders each chart-INPUT table from [[ChartTables]] to a self-contained
   * SVG — no plotting library, no external deps, deterministic output.
   *
-  * Scale note: chart tables are small BY CONSTRUCTION (fixed bin counts /
-  * per-operator-name rollups of the distributed aggregations), so the
-  * driver-side collect here is the sanctioned kind — rendering never sees
-  * raw data. Tables wider than `maxBars` are truncated with an explicit
+  * Scale note: most chart tables are small by construction (fixed bin
+  * counts, per-operator-name or per-statement-type rollups), but not all:
+  * `runtime_seconds` has one row per query and `straggler_ops` one per
+  * straggling operator. What keeps rendering bounded is that it collects at
+  * most `maxBars` rows of any table (plus its row count) to the driver.
+  * Tables longer than `maxBars` are truncated with an explicit
   * "(first N of M)" title suffix, never silently.
   *
   * Visual spec (single-series bars): one hue for magnitude, neutral-ink
@@ -103,10 +107,11 @@ object ChartRender {
     svgBarChart(title, labels, values)
   }
 
-  /** Render every chart table to `outDir/<name>.svg`; returns the paths. */
+  /** Render every chart table to `outDir/<name>.svg`, the tables' jobs
+    * side by side; returns the paths in name order. */
   def renderAll(charts: Map[String, DataFrame], outDir: String): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    charts.toSeq.sortBy(_._1).map { case (name, df) =>
+    Scale.concurrently(charts.toSeq.sortBy(_._1)) { case (name, df) =>
       val path = s"$outDir/$name.svg"
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         renderTable(name, df).getBytes("UTF-8"))

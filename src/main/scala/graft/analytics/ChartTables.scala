@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.ProfileIngest.ProfileTables
+import graft.operators.Scale
 
 /** S8 (SURVEY.md §2.1): the reference renders ~30 matplotlib PNGs; the
   * engine-scope equivalent is the aggregated chart-INPUT tables, emitted as
@@ -62,7 +63,15 @@ object ChartTables {
   /** Emit every chart-input table under `outDir/<name>` (Parquet). */
   def writeAll(t: ProfileTables, outDir: String,
                queriesWithSql: Option[DataFrame] = None): Unit =
-    all(t, queriesWithSql).foreach { case (name, df) =>
+    write(all(t, queriesWithSql), outDir)
+
+  /** Write each table as one Parquet file under `outDir/<name>`, the
+    * tables' independent jobs side by side. One file keeps a sorted
+    * table's row order for readers that take its first rows. */
+  def write(charts: Map[String, DataFrame], outDir: String): Unit = {
+    Scale.concurrently(charts.toSeq.sortBy(_._1)) { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
+    ()
+  }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Scale
+
 /** M1-M4 (SURVEY.md §2.5; reference code/python/clustering.py): workload
   * clustering over the 10-dim syntactic feature vector.
   *
@@ -71,13 +73,12 @@ object Clustering {
     * per k, plus BSS/TSS% variance explained. Returns (k, wcss, pct).
     *
     * The K fits are INDEPENDENT jobs over the same input, so they run
-    * concurrently (`fitParallelism` driver threads — Spark's scheduler
-    * interleaves their stages across the executors; sequential fits would
-    * serialize the ~|ks| jobs of the reference workflow). The input is
-    * persisted once and shared by every fit; we only unpersist what we
-    * persisted, so a caller-cached input is left alone. */
-  def elbow(scaled: DataFrame, ks: Seq[Int], seed: Long = 42L,
-            fitParallelism: Int = 4): Seq[(Int, Double, Double)] = {
+    * concurrently ([[Scale.concurrently]] — Spark's scheduler interleaves
+    * their stages across the executors; sequential fits would serialize the
+    * ~|ks| jobs of the reference workflow). The input is persisted once and
+    * shared by every fit; we only unpersist what we persisted, so a
+    * caller-cached input is left alone. */
+  def elbow(scaled: DataFrame, ks: Seq[Int], seed: Long = 42L): Seq[(Int, Double, Double)] = {
     val ownPersist = scaled.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (ownPersist) scaled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -95,21 +96,9 @@ object Clustering {
         if (k == 1) tss else
           new KMeans().setK(k).setMaxIter(500).setSeed(seed)
             .setFeaturesCol("features").fit(scaled).summary.trainingCost
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(fitParallelism, ks.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val wcsss =
-        // shutdownNow, not shutdown: when one fit fails, Await.result
-        // rethrows immediately but plain shutdown would let the remaining
-        // |ks|-1 queued fits keep running on non-daemon threads AFTER the
-        // outer finally unpersists their shared input (each would then
-        // recompute it from source). shutdownNow drops the queue and
-        // interrupts; on success all futures are already complete and it
-        // is equivalent to shutdown.
-        try Await.result(Future.sequence(ks.map(k => Future(k -> wcssOf(k)))), Duration.Inf)
-        finally { pool.shutdownNow(); () }
+      // a failed fit stops the queued ones before the finally below
+      // unpersists their shared input (see Scale.concurrently)
+      val wcsss = Scale.concurrently(ks)(k => k -> wcssOf(k))
       // tss = 0 on degenerate input (every feature vector identical ->
       // standardized to the origin): wcss is 0 too and 0/0 would emit NaN
       // into the elbow table — report 100% explained instead

@@ -5,9 +5,48 @@ import org.apache.spark.sql.functions._
 
 /** Scale-out utilities: bucketed co-located joins and salted skew
   * aggregation — the two knobs the 100 TB plan needs that small-SF tests
-  * never force.
+  * never force — plus the one way the driver runs independent Spark jobs
+  * side by side ([[concurrently]]).
   */
 object Scale {
+
+  /** Driver threads [[concurrently]] runs at most: enough to keep a small
+    * cluster's cores busy with many tiny jobs, few enough that large jobs
+    * do not crowd each other out of the scheduler. */
+  private val ConcurrentJobs = 4
+
+  /** `xs.map(f)` with up to [[ConcurrentJobs]] elements in flight at once —
+    * for independent Spark actions (fits, writes, renders), which Spark
+    * plans as one job each and would otherwise run one after another while
+    * most cores wait. Results come back in input order; the first failure
+    * to complete is rethrown as is.
+    *
+    * The pool is FRESH per call: its threads are created by the calling
+    * thread, so they inherit its SparkContext local properties (job group,
+    * scheduler pool) and a job submitted inside `f` is accounted to, and
+    * cancellable with, the caller's group. A long-lived shared pool would
+    * keep the properties of whichever thread first started its workers.
+    *
+    * `shutdownNow`, not `shutdown`, in the `finally`: when one element
+    * fails, the caller's own `finally` (typically an unpersist of the input
+    * every element shares) runs right away, and plain shutdown would let
+    * the queued elements keep running on non-daemon threads after it, each
+    * recomputing that input from source. shutdownNow drops the queue and
+    * interrupts; on success every element is complete and it is equivalent
+    * to shutdown. */
+  def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    if (xs.isEmpty) return Seq.empty
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(ConcurrentJobs, xs.size))
+    try {
+      val done = new java.util.concurrent.ExecutorCompletionService[B](pool)
+      val futures = xs.map(x => done.submit(() => f(x)))
+      xs.foreach { _ =>
+        try done.take().get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+      futures.map(_.get())
+    } finally { pool.shutdownNow(); () }
+  }
 
   /** Repartition up to the session's default parallelism when the
     * upstream plan has FEWER partitions — the small-input/few-files case

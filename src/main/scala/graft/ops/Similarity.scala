@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Scale
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Scale design (100 TB corpus, 1000 executors):
@@ -587,15 +589,6 @@ object Similarity {
       s"dim must split evenly into m subspaces: dim=$dim m=$m")
     val subDim = dim / m
     val e = emb.select(asDouble(col(vec)).as("v")).cache()
-    // concurrent fits over the one cached projection (the ml/Clustering
-    // elbow precedent, incl. its shutdownNow-on-failure rationale: a plain
-    // shutdown would let queued fits outlive the finally-unpersist and
-    // recompute the projection from source) — ADVICE r14 flagged the doc
-    // claiming concurrency the code didn't have; now it has it
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, m))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def fitSubspace(s: Int): Array[Seq[Double]] = {
       val sub = e.select(array_to_vector(
         slice(col("v"), s * subDim + 1, subDim)).as("fv"))
@@ -603,12 +596,10 @@ object Similarity {
         .setPredictionCol("__c").fit(sub)
         .clusterCenters.map(_.toArray.toSeq)
     }
-    try {
-      val books =
-        Await.result(Future.sequence((0 until m).map(s => Future(fitSubspace(s)))),
-          Duration.Inf).toArray
-      PqCodebooks(m, subDim, books)
-    } finally { pool.shutdownNow(); e.unpersist(); () }
+    // concurrent fits over the one cached projection; a failed fit stops
+    // the queued ones before the unpersist (see Scale.concurrently)
+    try PqCodebooks(m, subDim, Scale.concurrently(0 until m)(fitSubspace).toArray)
+    finally { e.unpersist(); () }
   }
 
   /** ADC top-k with TRAINED codebooks — the production PQ path: same

@@ -69,6 +69,42 @@ class PipelineSpec extends SparkSpec {
     assert(fin.agg(sum("size")).head.getLong(0) === s.nSelectLike)
   }
 
+  test("Pipeline.run figures equal the renders of the chart tables' lineage") {
+    // more queries than a figure has bars, and no post-shuffle coalescing,
+    // so tables span several partitions as at scale: a table whose written
+    // rows came back in another order than its lineage's would show other
+    // bars or labels
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_pipeline_figs")
+      // (a line's query id is the hash of its payload, so every statement differs)
+      val stmts = Seq[Int => String](
+        i => s"select l_returnflag, count(*) from tpch.lineitem where l_linenumber > $i group by 1",
+        i => s"select * from t where a in (1, 2, $i) order by b limit 10",
+        i => s"select a, sum(b) from t join u on t.id = u.id where c between 1 and $i group by a")
+      java.nio.file.Files.write(dir.resolve("dump.txt"), (0 until 120).map { i =>
+        dumpLine(queryProfile(stmts(i % stmts.size)(i)), qid = s"f$i")
+      }.mkString("\n").getBytes("UTF-8"))
+      val out = java.nio.file.Files.createTempDirectory("graft_pipeline_figs_out").toString
+      val s = Pipeline.run(spark, "tagF", dir.toString, out, elbowKs = Seq(1, 2), finalK = 2)
+      assert(s.nQueries === 120)
+      val q = spark.read.parquet(s"$out/model/queries").filter(col("tag") === "tagF")
+      val ids = q.select("query_id")
+      val lineage = graft.analytics.ChartTables.all(graft.ingest.ProfileIngest.ProfileTables(q,
+        spark.read.parquet(s"$out/model/operators").join(ids, Seq("query_id"), "left_semi"),
+        spark.read.parquet(s"$out/model/fragments").join(ids, Seq("query_id"), "left_semi")),
+        Some(spark.read.parquet(s"$out/queries_with_sql")))
+      assert(lineage.keys.toSeq.sorted === s.chartTables)
+      s.chartTables.foreach { name =>
+        val svg = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(s"$out/figures/$name.svg")), "UTF-8")
+        assert(svg === graft.analytics.ChartRender.renderTable(name, lineage(name)), s"figure $name")
+      }
+    } finally spark.conf.set(key, was)
+  }
+
   test("CorpusMain.run cleans, shards, and writes a training-ready corpus layout") {
     import org.apache.spark.sql.functions.col
     val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString

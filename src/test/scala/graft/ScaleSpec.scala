@@ -89,4 +89,39 @@ class ScaleSpec extends SparkSpec {
         s"expected a (k, __salt) shuffle:\n$p")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
   }
+
+  test("concurrently returns results in input order and rethrows an element's failure") {
+    // later elements finish first, so completion order is the reverse of input order
+    val xs = 1 to 8
+    assert(Scale.concurrently(xs) { i => Thread.sleep((9 - i) * 20L); i * i } === xs.map(i => i * i))
+    assert(Scale.concurrently(Seq.empty[Int])(identity) === Seq.empty)
+    val e = intercept[IllegalStateException] {
+      Scale.concurrently(xs) { i => if (i == 3) throw new IllegalStateException("element 3") else i }
+    }
+    assert(e.getMessage === "element 3")
+  }
+
+  test("concurrently submits each element's jobs under the caller's job group") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("graft.scale.elem")))
+          .foreach(el => seen.put(el, String.valueOf(j.properties.getProperty("spark.jobGroup.id"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("scale-spec-group", "concurrently job group")
+    try {
+      Scale.concurrently(1 to 6) { i =>
+        sc.setLocalProperty("graft.scale.elem", i.toString)
+        spark.range(0, i * 10L).count()
+      }
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toMap === (1 to 6).map(i => i.toString -> "scale-spec-group").toMap)
+  }
 }
