@@ -17,7 +17,9 @@ import graft.sqlstats.SqlFeatures
   *  1. ingest    — decode+parse every dump line in `inDir` into the three
   *                 Parquet model tables under `outDir/model` (S1-S4);
   *  2. sqlstats  — attach the J1-J5 SQL feature struct to this run's
-  *                 queries, written to `outDir/queries_with_sql` (S6);
+  *                 queries, analyzing each distinct statement text once
+  *                 and joining the features back by that text, written to
+  *                 `outDir/queries_with_sql` (S6);
   *  3. analytics — build every chart-input table once (R-series
   *                 aggregations, S8 scope), write them concurrently under
   *                 `outDir/charts`, and render each written table to
@@ -63,7 +65,8 @@ object Pipeline {
       model.operators.join(broadcast(tagIds), Seq("query_id"), "left_semi"),
       model.fragments.join(broadcast(tagIds), Seq("query_id"), "left_semi"))
 
-    // 2. SQL features (J1-J5 via S6): executor-parallel analyze + rewrite
+    // 2. SQL features (J1-J5 via S6): analyze once per distinct statement,
+    // join back by statement text, rewrite
     val withSql = SqlFeatures.attach(spark, t.queries)
     withSql.write.mode("overwrite").parquet(s"$outDir/queries_with_sql")
     val withSqlBack = spark.read.parquet(s"$outDir/queries_with_sql")

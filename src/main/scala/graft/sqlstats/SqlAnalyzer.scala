@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * unresolved plans — the rebuild of the reference's Impala-frontend AST
   * visitors (QueryAnalyzer.java:34-331, QueryStats.java:7-137) without the
   * missing impala-frontend jar. `CatalystSqlParser` is session-free, so the
-  * whole analysis runs inside executors (map over the queries table),
+  * whole analysis runs inside executors (a map over the queries table's
+  * distinct statements, see `SqlFeatures.attach`),
   * unlike the reference's single-threaded driver loop.
   *
   * Catalyst-vs-Impala mapping notes:

@@ -129,15 +129,24 @@ object SqlFeatures {
     }
   }
 
-  /** S6: attach features to the queries table (executor-parallel map +
-    * join-and-overwrite; Parquet is immutable so the "update" is a rewrite).
+  /** S6: attach features to the queries table (join-and-overwrite; Parquet
+    * is immutable so the "update" is a rewrite). [[analyze]] runs once per
+    * distinct statement text, on the executors, and its result is joined
+    * back onto every row carrying that exact text: workloads repeat their
+    * statements, so most rows would otherwise re-parse a statement already
+    * seen. The join is null-safe so a null `stmt` still reads Unparseable,
+    * and each input row comes back exactly once, even when a `query_id`
+    * appears under several tags. When the statements do not repeat, the
+    * `distinct` aggregate, its shuffle and the join on the statement text
+    * are extra work; that cost has not been measured.
     */
   def attach(spark: SparkSession, queries: DataFrame): DataFrame = {
     import spark.implicits._
-    val feats = queries.select(col("query_id"), col("stmt")).as[(String, String)]
-      .map { case (qid, stmt) => (qid, analyze(stmt)) }
-      .toDF("query_id", "sql")
-    queries.join(feats, Seq("query_id"), "left")
+    val feats = queries.select("stmt").distinct().as[String]
+      .map(s => (s, analyze(s)))
+      .toDF("__stmt", "sql")
+    queries.join(feats, queries("stmt") <=> feats("__stmt"), "left")
+      .drop(feats("__stmt"))
       .withColumn("sql_type", col("sql.sql_type"))
   }
 }

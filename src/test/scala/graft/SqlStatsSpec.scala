@@ -218,14 +218,72 @@ class SqlStatsSpec extends SparkSpec {
   }
 
   test("attach joins features onto the queries table") {
+    // one row per input row and every input column unchanged; each `sql`
+    // struct equals analyze() of the row's exact text
     import spark.implicits._
-    val queries = Seq(
-      ("q1", "SELECT a FROM t WHERE a = 1"),
-      ("q2", "INSERT INTO x SELECT b FROM u")
-    ).toDF("query_id", "stmt")
+    val repeated = "SELECT a, count(*) FROM t WHERE a IN (1, 2) GROUP BY a"
+    val rows: Seq[(String, String, String, Int)] =
+      (1 to 12).map(i => (s"r$i", "t1", repeated, i)) ++ Seq(
+        ("ins", "t1", "INSERT OVERWRITE TABLE x SELECT b FROM u WHERE b > 2", 13),
+        ("ddl", "t1", "CREATE TABLE t (x INT)", 14),
+        ("cs", "t1", "COMPUTE STATS db.t", 15),
+        ("junk", "t1", "THIS IS NOT SQL AT ALL", 16),
+        ("nul", "t1", null, 17),
+        // differ only in case / whitespace: analyzed as two texts
+        ("lo", "t1", "select a from t where a = 1", 18),
+        ("up", "t1", "SELECT a FROM t WHERE a = 1", 19),
+        ("ws", "t1", "SELECT a  FROM t WHERE a = 1", 20))
+    val queries = rows.toDF("query_id", "tag", "stmt", "n")
     val out = SqlFeatures.attach(spark, queries)
-    val types = out.select("query_id", "sql_type").as[(String, String)].collect().toMap
-    assert(types === Map("q1" -> "SelectStmt", "q2" -> "InsertStmt"))
-    assert(out.select("sql.num_where_binary_predicates").count() === 2)
+    assert(out.columns.toSeq === queries.columns.toSeq ++ Seq("sql", "sql_type"))
+    assert(out.count() === rows.size)
+    val back = out.select("query_id", "tag", "stmt", "n", "sql", "sql_type")
+      .as[(String, String, String, Int, SqlFeatures, String)].collect()
+    assert(back.map(r => (r._1, r._2, r._3, r._4)).sortBy(_._1).toSeq === rows.sortBy(_._1))
+    back.foreach { case (qid, _, stmt, _, sql, tpe) =>
+      assert(sql === SqlFeatures.analyze(stmt), qid)
+      assert(tpe === sql.sql_type, qid)
+    }
+    val types = back.map(r => r._1 -> r._6).toMap
+    assert(types("nul") === "Unparseable")
+    assert(types("cs") === "Unparseable")
+    assert(types("junk") === "Unparseable")
+    assert(types("ins") === "InsertStmt")
+    assert(types("r1") === "SelectStmt")
+  }
+
+  test("attach returns each row once when a query_id appears under two tags") {
+    import spark.implicits._
+    // a dump re-ingested under a second tag: same query_id, same payload
+    val queries = Seq(
+      ("q1", "a", "SELECT a FROM t WHERE a = 1"),
+      ("q1", "b", "SELECT a FROM t WHERE a = 1"),
+      ("q2", "a", "CREATE TABLE t (x INT)")
+    ).toDF("query_id", "tag", "stmt")
+    val out = SqlFeatures.attach(spark, queries)
+    assert(out.count() === queries.count())
+    val ddl = SqlFeatures.analyze("CREATE TABLE t (x INT)").sql_type
+    assert(out.select("query_id", "tag", "sql_type").as[(String, String, String)]
+      .collect().sorted.toSeq === Seq(
+        ("q1", "a", "SelectStmt"), ("q1", "b", "SelectStmt"), ("q2", "a", ddl)))
+  }
+
+  test("attach analyzes above an aggregate keyed on stmt, never per row") {
+    import org.apache.spark.sql.execution.MapElementsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    val queries = (1 to 20).map(i => (s"q$i", s"SELECT a FROM t WHERE a = ${i % 3}"))
+      .toDF("query_id", "stmt")
+    val out = SqlFeatures.attach(spark, queries)
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val maps = Plans.collect(plan) { case m: MapElementsExec => m }
+    assert(maps.size === 1, plan)
+    val stmtAggs = Plans.collect(maps.head) {
+      case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("stmt") => a
+    }
+    assert(stmtAggs.nonEmpty, s"analyze must map the distinct statements:\n$plan")
   }
 }

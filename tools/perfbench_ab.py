@@ -21,6 +21,13 @@ quartiles, and the pairs the change won, then applies the acceptance rule:
 It also flags seeds whose output fingerprints differ between the sides and
 runs with a nonzero failed_frac. Exit status 1 when a claim fails, a metric
 is worse, a fingerprint differs or a run failed; 0 otherwise.
+
+Where both sides also hold <workload>-seed<n>-trace1.json artifacts of the
+same seed (`perfbench/run.py --trace 1`), it prints, for every per-layer
+metric of BENCHMARK.json that is nonzero on either side, each side's median
+and the pairs where the change read better (or the same), then per seed the
+jobs, tasks and shuffle MB of every span of the traced chain. This part only
+reports: it does not change the exit status.
 """
 import argparse
 import glob
@@ -31,15 +38,15 @@ import statistics
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ARTIFACT = re.compile(r"^(?P<workload>.+)-seed(?P<seed>\d+)-trace0\.json$")
+ARTIFACT = re.compile(r"^(?P<workload>.+)-seed(?P<seed>\d+)-trace[01]\.json$")
 WIN_SHARE = 0.9
 MIN_PAIRS = 10
 
 
-def load(out_dir):
-    """workload -> seed -> artifact, for the untraced artifacts in out_dir."""
+def load(out_dir, trace=0):
+    """workload -> seed -> artifact, for the artifacts of one trace level in out_dir."""
     runs = {}
-    for path in glob.glob(os.path.join(out_dir, "*-trace0.json")):
+    for path in glob.glob(os.path.join(out_dir, f"*-trace{trace}.json")):
         m = ARTIFACT.match(os.path.basename(path))
         if m:
             with open(path) as f:
@@ -63,6 +70,43 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def spans(artifact):
+    """name -> span of the traced chain (the "Layers" round)."""
+    return {sp["name"]: sp for op in artifact["operations"] if op["round"] == "Layers"
+            for sp in op.get("spans", [])}
+
+
+def report_trace(parent_dir, change_dir, metrics):
+    """Per-layer medians and pairs of the trace-1 runs; every chain span's shape per seed."""
+    parent, change = load(parent_dir, 1), load(change_dir, 1)
+    for workload in sorted(set(parent) & set(change)):
+        p_runs, c_runs = parent[workload], change[workload]
+        seeds = sorted(set(p_runs) & set(c_runs))
+        if not seeds:
+            continue
+        print(f"== {workload} trace: {len(seeds)} pairs {seeds}")
+        for m in metrics:
+            name = m["name"]
+            sign = 1 if m["better"] == "lower" else -1
+            p = [p_runs[s]["metrics"][name]["value"] for s in seeds]
+            c = [c_runs[s]["metrics"][name]["value"] for s in seeds]
+            if not any(p) and not any(c):
+                continue
+            better = sum(1 for x, y in zip(p, c) if sign * (x - y) > 0)
+            same = sum(1 for x, y in zip(p, c) if y == x)
+            print(f"  {name:30s} [{m['unit']}, {m['better']} is better] parent median {statistics.median(p):.3f}  "
+                  f"change median {statistics.median(c):.3f}  "
+                  f"change better in {better}/{len(seeds)} pairs, same in {same}")
+        for s in seeds:
+            p_spans, c_spans = spans(p_runs[s]), spans(c_runs[s])
+            for name in sorted(set(p_spans) | set(c_spans)):
+                shape = "; ".join(
+                    f"{side} {sp['jobs']} jobs / {sp['tasks']} tasks / {sp['shuffle_mb']:.2f} MB shuffle"
+                    if sp else f"{side} no span"
+                    for side, sp in (("parent", p_spans.get(name)), ("change", c_spans.get(name))))
+                print(f"  span {name} seed {s}: {shape}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent")
@@ -72,7 +116,8 @@ def main():
     ap.add_argument("--benchmark", default=os.path.join(ROOT, "BENCHMARK.json"))
     a = ap.parse_args()
     with open(a.benchmark) as f:
-        metrics = json.load(f)["end_to_end"]
+        benchmark = json.load(f)
+    metrics = benchmark["end_to_end"]
     claims = {tuple(c.split(":", 1)) for c in a.claim}
     parent, change = load(a.parent), load(a.change)
     bad = False
@@ -116,6 +161,7 @@ def main():
             print(f"    parent n={len(p)} median={pmed:.3f} q1={pq1:.3f} q3={pq3:.3f}")
             print(f"    change n={len(c)} median={cmed:.3f} q1={cq1:.3f} q3={cq3:.3f}")
             print(f"    pairs won {won}/{len(seeds)}; {verdict}")
+    report_trace(a.parent, a.change, benchmark["per_layer"])
     sys.exit(1 if bad else 0)
 
 
